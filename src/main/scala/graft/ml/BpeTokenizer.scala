@@ -170,10 +170,7 @@ object BpeTokenizer {
     */
   def load(spark: SparkSession, path: String): BpeModel = {
     val p = new org.apache.hadoop.fs.Path(s"$path/meta.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaTxt = new String(
-      org.apache.commons.io.IOUtils.toByteArray(fs.open(p)),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val metaTxt = graft.sources.JsonSidecar.read(spark, p.toString)
     def meta(k: String): Int =
       s""""$k"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(metaTxt)
         .getOrElse(throw new IllegalArgumentException(

@@ -259,10 +259,7 @@ object NgramLm {
     */
   def load(spark: SparkSession, path: String): LmModel = {
     val p = new org.apache.hadoop.fs.Path(s"$path/meta.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaTxt = new String(
-      org.apache.commons.io.IOUtils.toByteArray(fs.open(p)),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val metaTxt = graft.sources.JsonSidecar.read(spark, p.toString)
     def metaOpt(k: String): Option[Int] =
       s""""$k"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(metaTxt).map(_.group(1).toInt)
     def meta(k: String): Int = metaOpt(k)

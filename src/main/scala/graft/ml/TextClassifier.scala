@@ -72,10 +72,7 @@ object TextClassifier {
   def load(spark: org.apache.spark.sql.SparkSession,
            path: String): LinearTextModel = {
     val p = new org.apache.hadoop.fs.Path(s"$path/meta.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaTxt = new String(
-      org.apache.commons.io.IOUtils.toByteArray(fs.open(p)),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val metaTxt = graft.sources.JsonSidecar.read(spark, p.toString)
     val k = """"k"\s*:\s*(\d+)""".r.findFirstMatchIn(metaTxt)
       .getOrElse(throw new IllegalArgumentException(
         s"malformed text-classifier meta at $p: $metaTxt")).group(1).toInt

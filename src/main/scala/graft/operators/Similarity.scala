@@ -511,12 +511,12 @@ object Similarity {
   def ivfPqDriftStats(spark: org.apache.spark.sql.SparkSession,
                       path: String, batch: DataFrame): DataFrame = {
     import spark.implicits._
-    val (coarse, _) = loadIvfPqModel(spark, path)
-    val metaTxt = readIndexMeta(spark, path)
+    val idx = OpenIndexes(spark, path)
+    val (coarse, _) = idx.model
     def metaLong(k: String): Long =
-      (s""""$k"\\s*:\\s*(\\d+)""").r.findFirstMatchIn(metaTxt)
+      graft.sources.JsonSidecar.longField(idx.stamp.meta, k)
         .getOrElse(throw new IllegalArgumentException(
-          s"index at $path predates drift stats: no $k in meta")).group(1).toLong
+          s"index at $path predates drift stats: no $k in meta"))
     val st = batch
       .select(minCoarseDist(col("embedding"), coarse).as("__d"))
       // count(col) skips nulls — a .filter(isNotNull) would be pushed
@@ -566,10 +566,11 @@ object Similarity {
     */
   def appendIvfPqIndex(batch: DataFrame, id: String, path: String): Unit = {
     val spark = batch.sparkSession
-    val (coarse, cbs) = loadIvfPqModel(spark, path)
+    val idx = OpenIndexes(spark, path)
+    val (coarse, cbs) = idx.model
     // read + validate the sidecar stat BEFORE any write, so a pre-stats
     // or torn index refuses with nothing appended
-    val metaTxt = readIndexMeta(spark, path)
+    val metaTxt = idx.stamp.meta
     def metaLong(k: String): Long =
       graft.sources.JsonSidecar.longField(metaTxt, k)
         .getOrElse(throw new IllegalArgumentException(
@@ -803,23 +804,23 @@ object Similarity {
   /** Load the (coarse, codebooks) sidecar written by [[writeIvfPqIndex]]
     * — rows re-sort to canonical order (bit-identical to the fitted
     * model); the sidecar's section sizes guard torn/foreign artifacts.
+    * Served from the open-index cache ([[OpenIndexes]]) while the index
+    * is unchanged.
     */
-  private def readIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                            path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/meta.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    new String(org.apache.commons.io.IOUtils.toByteArray(fs.open(p)),
-      java.nio.charset.StandardCharsets.UTF_8)
-  }
-
   def loadIvfPqModel(spark: org.apache.spark.sql.SparkSession, path: String)
+      : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) =
+    OpenIndexes(spark, path).model
+
+  /** The model read behind [[loadIvfPqModel]], validated against the
+    * meta.json text the caller stamped.
+    */
+  private def readIvfPqModel(spark: org.apache.spark.sql.SparkSession,
+                             path: String, metaTxt: String)
       : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/meta.json")
-    val metaTxt = readIndexMeta(spark, path)
     def meta(k: String): Int =
-      s""""$k"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(metaTxt)
+      graft.sources.JsonSidecar.longField(metaTxt, k)
         .getOrElse(throw new IllegalArgumentException(
-          s"malformed IVF-PQ meta at $p: $metaTxt")).group(1).toInt
+          s"malformed IVF-PQ meta at $path/meta.json: $metaTxt")).toInt
     val (nc, m, cs) = (meta("nCentroids"), meta("m"), meta("codebookSize"))
     val rows = spark.read.parquet(s"$path/model").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2),
@@ -835,6 +836,91 @@ object Similarity {
     (coarse, cbs)
   }
 
+  /** What an index looked like when it was opened, read with three
+    * driver-side file-system calls and no Spark job: the meta.json text
+    * (append rewrites it — statN grows), the `model/` leaf statuses
+    * (write and refit land a part file named by a fresh job id) and the
+    * `encoded/_SUCCESS` status (every committed write of the encoded
+    * tree, compaction included, rewrites it). `encodedDone` is None
+    * while the encoded tree is absent — the crash window that compaction
+    * recovers from with the model already loaded.
+    */
+  private[operators] final case class IndexStamp(meta: String,
+                                      model: Seq[(String, Long, Long)],
+                                      encodedDone: Option[(Long, Long)])
+
+  private def readIndexStamp(spark: org.apache.spark.sql.SparkSession,
+                             path: String): IndexStamp = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val meta = graft.sources.JsonSidecar.read(spark, s"$path/meta.json")
+    val model = fs.listStatus(new org.apache.hadoop.fs.Path(root, "model"))
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
+      .sortBy(_._1).toSeq
+    val done =
+      try {
+        val st = fs.getFileStatus(
+          new org.apache.hadoop.fs.Path(root, "encoded/_SUCCESS"))
+        Some((st.getLen, st.getModificationTime))
+      } catch { case _: java.io.FileNotFoundException => None }
+    IndexStamp(meta, model, done)
+  }
+
+  /** One opened index: the validated model, and the `encoded` relation
+    * whose schema and partition listing are resolved once, on first use
+    * (compaction opens the model while `encoded` may be absent).
+    */
+  private[operators] final class OpenIndex(
+      val spark: org.apache.spark.sql.SparkSession, path: String,
+      val stamp: IndexStamp,
+      val model: (Seq[Seq[Double]], Seq[Seq[Seq[Double]]])) {
+    lazy val encoded: DataFrame = spark.read.parquet(s"$path/encoded")
+  }
+
+  /** The open-index cache: one [[OpenIndex]] per index path, reused while
+    * the path's [[IndexStamp]] and the caller's session are unchanged,
+    * least-recently-used eviction past [[OpenIndexes.Capacity]]. A miss
+    * loads the model (torn-sidecar guard included) and records the stamp
+    * read BEFORE the load, so a write racing the load leaves an entry
+    * that the next call sees as stale. A stamp read that finds no index
+    * (FileNotFoundException) drops the entry and rethrows.
+    */
+  private[operators] object OpenIndexes {
+    val Capacity = 8
+    private val lru =
+      new java.util.LinkedHashMap[String, OpenIndex](Capacity, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[String, OpenIndex]): Boolean =
+          size > Capacity
+      }
+
+    def apply(spark: org.apache.spark.sql.SparkSession,
+              path: String): OpenIndex = {
+      val stamp =
+        try readIndexStamp(spark, path)
+        catch { case e: java.io.FileNotFoundException => drop(path); throw e }
+      lru.synchronized(Option(lru.get(path)))
+        .filter(e => (e.spark eq spark) && e.stamp == stamp)
+        .getOrElse {
+          val e =
+            try new OpenIndex(spark, path, stamp,
+              readIvfPqModel(spark, path, stamp.meta))
+            catch { case t: Throwable => drop(path); throw t }
+          lru.synchronized(lru.put(path, e))
+          e
+        }
+    }
+
+    private def drop(path: String): Unit = lru.synchronized(lru.remove(path))
+
+    /** The cached entries, least recently used first (reading them does
+      * not reorder them).
+      */
+    private[operators] def entries: Seq[(String, OpenIndex)] =
+      lru.synchronized(scala.jdk.CollectionConverters.SetHasAsScala(
+        lru.entrySet).asScala.iterator.map(e => e.getKey -> e.getValue).toList)
+  }
+
   /** IVF-PQ search OVER THE PERSISTED INDEX — result rows are identical
     * to [[ivfPqTopK]] on the same corpus/model (spec-pinned; the q6n
     * oracle replays the from-scratch computation, so index corruption
@@ -848,13 +934,27 @@ object Similarity {
     * how many raw embeddings exist. The returned plan carries no coarse
     * distance computation (spec-pinned): FpSqDist lives only in the
     * probe job.
+    *
+    * Serving contract: the index at `path` is opened once per session —
+    * model load, `encoded` schema inference and partition discovery — and
+    * later calls reuse it, so a repeat search runs only the probe
+    * ranking's jobs before the returned plan executes. Every call first
+    * re-reads the index's stamp (meta.json text, `model/` file statuses,
+    * `encoded/_SUCCESS` status; no Spark job) and reopens on any change:
+    * [[appendIvfPqIndex]] rewrites meta.json, [[compactIvfPqIndex]]
+    * commits a new encoded tree, [[writeIvfPqIndex]] and
+    * [[refitIvfPqIndex]] write a new model part file. Mutate an index only
+    * through those four calls — files changed behind their back are not
+    * seen until the stamp moves, and a search over deleted files fails
+    * rather than returning a subset.
     */
   def ivfPqTopKFromIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String, queries: DataFrame, queryId: String,
                          k: Int, nProbe: Int,
                          maxProbeRows: Int = 1 << 22): DataFrame = {
     import spark.implicits._
-    val (coarse, cbs) = loadIvfPqModel(spark, path)
+    val idx = OpenIndexes(spark, path)
+    val (coarse, cbs) = idx.model
     require(nProbe > 0 && nProbe <= coarse.size,
       s"bad probe count: nProbe=$nProbe of ${coarse.size} cells")
     require(maxProbeRows > 0, s"bad probe-row cap: $maxProbeRows")
@@ -896,7 +996,7 @@ object Similarity {
         java.util.Arrays.asList(probeRows: _*), probeFrame.schema)
       .join(queries.select(col(queryId).as("__qid"),
         col("embedding").as("__qe")), Seq("__qid"))
-    val enc = spark.read.parquet(s"$path/encoded")
+    val enc = idx.encoded
       .filter(col("cell").isin(cells: _*))
       .select(col("vec_id").as("__cid"), col("codes").as("__codes"),
         col("cell").cast("int").as("__cell"))

@@ -37,14 +37,22 @@ private[graft] object JsonSidecar {
       .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
+  /** The sidecar's full text; the stream is closed before returning.
+    * Throws [[java.io.FileNotFoundException]] if the file does not exist.
+    */
+  def read(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    try new String(org.apache.commons.io.IOUtils.toByteArray(in),
+      java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
   /** The sidecar's full text, or None if the file does not exist. */
   def readOpt(spark: SparkSession, path: String): Option[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Some(new String(
-      org.apache.commons.io.IOUtils.toByteArray(fs.open(p)),
-      java.nio.charset.StandardCharsets.UTF_8))
+    if (!fs.exists(p)) None else Some(read(spark, path))
   }
 
   /** A (possibly negative) integer field, tolerant of any spacing. */

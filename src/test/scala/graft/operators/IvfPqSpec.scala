@@ -1,7 +1,10 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class IvfPqSpec extends SparkSpec {
   import spark.implicits._
@@ -462,5 +465,174 @@ class IvfPqSpec extends SparkSpec {
     assert(plan.contains("Broadcast"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
     assert(!plan.contains("Window"), plan)
+  }
+
+  // 64 tight clusters on a 4x4x4 grid (spacing 10), three points each:
+  // one cell directory per cluster when the centers are the coarse cells
+  private val gridCenters: Seq[Seq[Double]] =
+    for (a <- 0 until 4; b <- 0 until 4; c <- 0 until 4)
+      yield Seq(10.0 * a, 10.0 * b, 10.0 * c, 0.0)
+  private def gridCorpus = gridCenters.zipWithIndex.flatMap { case (cc, i) =>
+    (0 until 3).map(j => ((i * 3 + j).toLong, cc.map(x => (x + 0.3 * j).toFloat)))
+  }.toDF("vec_id", "embedding")
+  private def gridQueries = Seq((1L, Seq(0.2f, 0.1f, 0.0f, 0.0f)),
+    (2L, Seq(30.1f, 19.9f, 10.0f, 0.0f)), (3L, Seq(14.0f, 5.0f, 26.0f, 1.0f)),
+    (4L, Seq(21.0f, 29.0f, 3.0f, -1.0f))).toDF("query_id", "embedding")
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.orderBy("query_id", "vec_id").collect().map(_.toString).toSeq
+
+  /** Runs `body` on `threads` threads released together; their results. */
+  private def concurrently[T](threads: Int)(body: => T): Seq[T] = {
+    val gate = new java.util.concurrent.CyclicBarrier(threads)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val futures = (1 to threads).map(_ => pool.submit(
+        new java.util.concurrent.Callable[T] {
+          def call(): T = { gate.await(); body }
+        }))
+      futures.map(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdownNow()
+  }
+
+  /** Task count of every job `body` starts on this thread, in start order.
+    * A sentinel job run afterwards drains the listener queue: events reach
+    * a listener in posting order, so once the sentinel's start arrives,
+    * every start of `body` has too.
+    */
+  private def jobTaskCounts[T](body: => T): (Seq[Int], T) = {
+    val sc = spark.sparkContext
+    val group = s"ivfpq-counted-${System.nanoTime}"
+    val sentinel = s"$group-sentinel"
+    val counts = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => counts.add(e.stageInfos.map(_.numTasks).sum)
+          case Some(`sentinel`) => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "listener drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(2, java.util.concurrent.TimeUnit.MINUTES))
+      (counts.asScala.toSeq, out)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("open index: a repeat search runs only the probe jobs, no partition listing") {
+    // 64 cells: more cell directories than Spark lists serially (32), so
+    // re-discovering the partitions on a search is a 64-task job
+    val corpus = gridCorpus
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_jobs").toString
+    Similarity.writeIvfPqIndex(corpus, "vec_id", s"$dir/idx", gridCenters, cbs)
+    val cellDirs = new java.io.File(s"$dir/idx/encoded").listFiles()
+      .count(_.getName.startsWith("cell="))
+    assert(cellDirs == 64)
+    val queries = gridQueries
+    def search() = Similarity.ivfPqTopKFromIndex(spark, s"$dir/idx",
+      queries, "query_id", k = 3, nProbe = 2)
+    val first = sortedRows(search())
+    val (tasks, found) = jobTaskCounts(search())
+    assert(tasks.size <= 3, s"repeat search started ${tasks.size} jobs: $tasks")
+    assert(!tasks.contains(cellDirs),
+      s"repeat search re-listed the cell directories: $tasks")
+    assert(sortedRows(found) == first)
+    assert(first == sortedRows(Similarity.ivfPqTopK(corpus, "vec_id",
+      queries, "query_id", k = 3, nProbe = 2, gridCenters, cbs)))
+  }
+
+  test("open index: warm cache follows append, compact, refit, a doctored meta and a missing tree") {
+    val (corpus, queries) = (gridCorpus, gridQueries)
+    val (c0, b0) = Similarity.fitIvfPq(corpus, nCentroids = 8, m = 2)
+    val (c1, b1) = Similarity.fitIvfPq(corpus, nCentroids = 8, m = 2,
+      seed = 43L)
+    val idx = java.nio.file.Files.createTempDirectory("ivfpq_warm")
+      .toString + "/idx"
+    def search() = sortedRows(Similarity.ivfPqTopKFromIndex(spark, idx,
+      queries, "query_id", k = 5, nProbe = 3))
+    def live(c: DataFrame, cc: Seq[Seq[Double]], cb: Seq[Seq[Seq[Double]]]) =
+      sortedRows(Similarity.ivfPqTopK(c, "vec_id", queries, "query_id",
+        k = 5, nProbe = 3, cc, cb))
+    val even = corpus.where(col("vec_id") % 2 === 0)
+    Similarity.writeIvfPqIndex(even, "vec_id", idx, c0, b0)
+    assert(search() == live(even, c0, b0))
+    Similarity.appendIvfPqIndex(corpus.where(col("vec_id") % 2 =!= 0),
+      "vec_id", idx)
+    val full = live(corpus, c0, b0)
+    assert(search() == full, "search after append missed the appended rows")
+    Similarity.compactIvfPqIndex(spark, idx)
+    assert(search() == full, "search changed across compaction")
+    Similarity.refitIvfPqIndex(corpus, "vec_id", idx, c1, b1)
+    val refit = live(corpus, c1, b1)
+    assert(refit != full, "the refit fixture must change the served rows")
+    assert(search() == refit, "search after refit served the old model")
+    val meta = new org.apache.hadoop.fs.Path(s"$idx/meta.json")
+    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def writeMeta(txt: String): Unit = {
+      val out = fs.create(meta, true)
+      try out.write(txt.getBytes) finally out.close()
+    }
+    val metaTxt = graft.sources.JsonSidecar.read(spark, meta.toString)
+    val doctored = metaTxt.replace("\"nCentroids\": 8", "\"nCentroids\": 9")
+    assert(doctored != metaTxt)
+    writeMeta(doctored)
+    intercept[IllegalArgumentException](search())
+    writeMeta(metaTxt)
+    assert(search() == refit)
+    val enc = java.nio.file.Paths.get(s"$idx/encoded")
+    val moved = java.nio.file.Paths.get(s"$idx/encoded.moved")
+    java.nio.file.Files.move(enc, moved)
+    intercept[Exception](search())
+    java.nio.file.Files.move(moved, enc)
+    assert(search() == refit)
+    assert(concurrently(2)(search()) == Seq(refit, refit))
+  }
+
+  test("open index cache: LRU capacity, dropped when the index vanishes, per session, concurrent miss") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_lru").toString
+    Similarity.writeIvfPqIndex(vecs, "vec_id", s"$dir/src", coarse, cbs)
+    val cap = Similarity.OpenIndexes.Capacity
+    val paths = (0 to cap).map { i =>
+      val p = s"$dir/idx$i"
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(s"$dir/src"), new java.io.File(p))
+      p
+    }
+    def cached = Similarity.OpenIndexes.entries.map(_._1)
+    paths.take(cap).foreach(Similarity.loadIvfPqModel(spark, _))
+    assert(cached == paths.take(cap))
+    Similarity.loadIvfPqModel(spark, paths(0))
+    Similarity.loadIvfPqModel(spark, paths(cap))
+    assert(cached == paths.slice(2, cap) ++ Seq(paths(0), paths(cap)),
+      "a full cache must evict its least recently used entry")
+    // an index deleted from disk is not retained
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(paths(0)))
+    intercept[java.io.FileNotFoundException](
+      Similarity.loadIvfPqModel(spark, paths(0)))
+    assert(!cached.contains(paths(0)))
+    // an entry belongs to the session that opened it
+    def session(p: String) =
+      Similarity.OpenIndexes.entries.toMap.get(p).map(_.spark)
+    val other = spark.newSession()
+    assert(Similarity.loadIvfPqModel(other, paths(cap)) == ((coarse, cbs)))
+    assert(session(paths(cap)).exists(_ eq other))
+    Similarity.loadIvfPqModel(spark, paths(cap))
+    assert(session(paths(cap)).exists(_ eq spark))
+    // two callers missing on the same index at once both get correct rows
+    val q = Seq((100L, Seq(1.0f, 1.0f, 1.0f, 1.0f)),
+      (101L, Seq(10.0f, 10.0f, 10.0f, 10.0f))).toDF("query_id", "embedding")
+    val expected = sortedRows(Similarity.ivfPqTopK(vecs, "vec_id", q,
+      "query_id", k = 2, nProbe = 1, coarse, cbs))
+    val fresh = s"$dir/fresh"
+    Similarity.writeIvfPqIndex(vecs, "vec_id", fresh, coarse, cbs)
+    assert(!cached.contains(fresh))
+    assert(concurrently(2)(sortedRows(Similarity.ivfPqTopKFromIndex(spark,
+      fresh, q, "query_id", k = 2, nProbe = 1))) == Seq(expected, expected))
   }
 }
